@@ -32,6 +32,9 @@ LANG_STOPWORDS: dict[str, list[str]] = {
     "de": ["der", "die", "und", "das", "von", "mit", "ist", "den", "ein", "nicht"],
     "zh": ["的", "了", "是", "在", "我", "有", "和", "不", "这", "个"],
 }
+# Stop words of every language: the membership set behind `stopword_ratio`
+# (the fused kernel's langid lookup doubles as this test).
+STOPWORD_UNION: list[str] = sorted({w for sw in LANG_STOPWORDS.values() for w in sw})
 LANG_ORDER = ["en", "es", "fr", "de", "zh"]  # argmax tie-break: first wins
 DEFAULT_LANG = "en"
 

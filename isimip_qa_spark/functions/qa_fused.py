@@ -6,8 +6,7 @@ same tokenisation — measured on this sandbox the JVM expression forms
 (split / array_distinct / array_contains chains) cost ~200µs/doc while this
 kernel computes identical values for ~40µs/doc. The column-expression forms
 (functions/textstats.py) remain the reference surface: STAGES (unfused) uses
-them, tests assert bit-equality between the two paths, and custom stopword
-configs fall back to them (see plans/stages.py fused_applicable).
+them and tests assert bit-equality between the two paths.
 
 Kernel shape (per Arrow batch of ~10k docs):
 - ONE tokenize: join the batch into a single byte buffer, lower once, split

@@ -9,6 +9,11 @@ written only after its job commits, so a killed run resumes by re-running
 exactly the missing chunks. On an Iceberg deployment the manifest is the
 snapshot log and a chunk is a partition-scoped append — same structure,
 different sink.
+
+A chunk's manifest is also the only record of its metrics and lineage:
+`publish` derives `out_dir/metrics/` and `out_dir/lineage/` from the
+committed manifests, so a chunk counts exactly once however many attempts
+it took.
 """
 
 from __future__ import annotations
@@ -51,6 +56,55 @@ def read_manifest(out_dir: str) -> dict[int, dict]:
         with open(os.path.join(manifest_dir(out_dir), f"chunk_{c}.json")) as f:
             out[c] = json.load(f)
     return out
+
+
+def publish(out_dir: str) -> None:
+    """Rewrite `metrics/` and `lineage/` from the committed manifests: one
+    parquet file each, swapped in by atomic replace. Everything else in the
+    two directories is removed — e.g. the per-attempt parts earlier
+    versions appended, which would double-count a resumed chunk. Manifests
+    from before lineage fields were recorded read with defaults."""
+    import shutil
+    from datetime import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from .sink import LINEAGE_SCHEMA, METRICS_SCHEMA, _arrow_schema
+
+    metrics, lineage = [], []
+    for chunk, man in read_manifest(out_dir).items():
+        h = man.get("config_hash", "")
+        for r in man.get("metrics", []):
+            ts = {k: r.get(k) and datetime.fromisoformat(r[k]) for k in ("ts_min", "ts_max")}
+            metrics.append(dict(r, config_hash=h, **ts))
+        lineage.append(
+            {
+                "config_hash": h,
+                "chunk": chunk,
+                "stages": ",".join(man.get("stages", [])),
+                "rows": man.get("rows", 0),
+                "n_hot_hosts": man.get("n_hot_hosts", 0),
+                "wall_s": man.get("wall_s", 0.0),
+            }
+        )
+    for name, rows, ddl in (
+        ("metrics", metrics, METRICS_SCHEMA + ", config_hash string"),
+        ("lineage", lineage, LINEAGE_SCHEMA),
+    ):
+        d = os.path.join(out_dir, name)
+        os.makedirs(d, exist_ok=True)
+        final = f"{name}.parquet"
+        tmp = os.path.join(d, f".{final}.tmp")
+        pq.write_table(pa.Table.from_pylist(rows, schema=_arrow_schema(ddl)), tmp)
+        os.replace(tmp, os.path.join(d, final))
+        for fn in os.listdir(d):
+            if fn != final:
+                p = os.path.join(d, fn)
+                if os.path.isdir(p):
+                    shutil.rmtree(p)
+                else:
+                    os.remove(p)
 
 
 # --- shared-cache artifact fetch (reference: fetch a completed extraction

@@ -5,16 +5,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
-
-
-def _union_stopwords() -> list[str]:
-    from ..functions.langid import LANG_STOPWORDS
-
-    out: set[str] = set()
-    for sw in LANG_STOPWORDS.values():
-        out.update(sw)
-    return sorted(out)
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -79,9 +70,9 @@ class QAConfig:
     # execution
     n_chunks: int = 8  # checkpoint granularity (resume unit)
     # "chunked": one job per chunk — a killed run resumes per chunk.
-    # "single_pass": one fused job writing all chunks (partitionBy) — ~3×
-    # less fixed cost at small scale; a mid-run crash reruns the pass, but
-    # a completed run still resumes chunk-wise on later invocations.
+    # "single_pass": one job over every missing chunk — ~3× less fixed
+    # cost at small scale; a fresh run is one job over the whole corpus,
+    # a partial resume is one job over just the chunks without manifests.
     checkpoint_mode: str = "chunked"
     n_partitions: int = 32
     # chunked mode: how many chunk jobs to keep in flight at once. Chunk
@@ -91,7 +82,6 @@ class QAConfig:
     n_concurrent_chunks: int = 1
     hot_host_frac: float = 0.05  # hosts above this share of rows get salted
     n_salts: int = 8
-    stopwords: list[str] = field(default_factory=_union_stopwords)
 
     # execution knobs that do not change output bytes — artifact identity
     # (config_hash) must not depend on them, or a resume after changing

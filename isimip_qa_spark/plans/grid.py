@@ -31,7 +31,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .checkpoint import completed_chunks
+from .checkpoint import completed_chunks, publish
 from .config import QAConfig
 from .pipeline import run_qa
 from .skew import detect_hot_hosts
@@ -176,10 +176,10 @@ def run_grid(
 # whole scan + Arrow scoring pass per cohort multiplies the dominant cost
 # by n_cohorts for zero new information. Here each window runs ONE run_qa
 # over the union of its cohorts' languages into a shared, chunk-resumable
-# staging; every combo then derives its artifacts (per-partition metrics,
-# lineage, chunk manifests) from a column-pruned read of the staging —
-# the derivation jobs read only the small metric columns plus `lang`,
-# never the text, and never re-score.
+# staging; every combo then derives its artifacts (chunk manifests with
+# per-partition metrics, then the published metrics/lineage tables) from a
+# column-pruned read of the staging — the derivation jobs read only the
+# small metric columns plus `lang`, never the text, and never re-score.
 #
 # The scored data itself is stored ONCE per window, partitioned by chunk;
 # a combo's manifest records the shared files plus its cohort predicate,
@@ -218,18 +218,12 @@ def read_combo_scored(spark: SparkSession, cdir: str) -> DataFrame:
 
 def _derive_combo(spark, wdir: str, cdir: str, cfg: QAConfig, wsum: dict) -> dict:
     """Materialise one combo's artifact set from the shared window staging:
-    per-(chunk, partition) metrics, lineage, chunk manifests, and the
-    shared-data marker. One Spark job reading only metric columns + lang."""
-    import pandas as pd
+    the shared-data marker, chunk manifests carrying the per-(chunk,
+    partition) metrics, then the published metrics/lineage tables. One
+    Spark job reading only metric columns + lang."""
     from pyspark.sql import functions as F
 
-    from .checkpoint import chunk_files
-    from .pipeline import (
-        _append_parquet_driver_side,
-        _metric_aggs,
-        _metrics_records,
-        read_scored,
-    )
+    from .pipeline import _metric_aggs, commit_chunks, read_scored
 
     t0 = time.time()
     scored = read_scored(spark, wdir)
@@ -243,31 +237,7 @@ def _derive_combo(spark, wdir: str, cdir: str, cfg: QAConfig, wsum: dict) -> dic
         .agg(*_metric_aggs(cfg))
         .toPandas()
     )
-    cfg_hash = cfg.config_hash()
-    metrics_pdf["config_hash"] = cfg_hash
-    _append_parquet_driver_side(metrics_pdf, f"{cdir}/metrics")
-
-    per_chunk = {
-        int(c): int(n)
-        for c, n in metrics_pdf.groupby("chunk")["n_docs"].sum().items()
-    }
     wall = round(time.time() - t0, 3)
-    from .stages import STAGES
-
-    lineage_pdf = pd.DataFrame(
-        [
-            {
-                "config_hash": cfg_hash,
-                "chunk": int(c),
-                "stages": ",".join(s.name for s in STAGES),
-                "rows": int(per_chunk.get(c, 0)),
-                "n_hot_hosts": len(wsum.get("hot_hosts") or []),
-                "wall_s": wall,
-            }
-            for c in range(cfg.n_chunks)
-        ]
-    )
-    _append_parquet_driver_side(lineage_pdf, f"{cdir}/lineage")
 
     os.makedirs(cdir, exist_ok=True)
     marker = {
@@ -279,28 +249,23 @@ def _derive_combo(spark, wdir: str, cdir: str, cfg: QAConfig, wsum: dict) -> dic
         json.dump(marker, f, sort_keys=True)
     os.replace(tmp, os.path.join(cdir, "shared_data.json"))
 
-    from .checkpoint import mark_chunk_done
-
-    for c in range(cfg.n_chunks):
-        mark_chunk_done(
-            cdir,
-            c,
-            {
-                "rows": int(per_chunk.get(c, 0)),
-                "config_hash": cfg_hash,
-                "stages": [s.name for s in STAGES],
-                "files": chunk_files(wdir, c),  # shared, not copied
-                "shared": marker,
-                "metrics": _metrics_records(
-                    metrics_pdf[metrics_pdf["chunk"] == c]
-                ),
-            },
-        )
+    cfg_hash = cfg.config_hash()
+    rows = commit_chunks(
+        cdir,
+        list(range(cfg.n_chunks)),
+        metrics_pdf,
+        cfg_hash,
+        len(wsum.get("hot_hosts") or []),
+        wall,
+        data_dir=wdir,  # shared, not copied
+        shared=marker,
+    )
+    publish(cdir)
     return {
         "status": "ran",
         "chunks_run": list(range(cfg.n_chunks)),
         "chunks_skipped": [],
-        "rows": int(sum(per_chunk.values())),
+        "rows": rows,
         "wall_s": wall,
         "config_hash": cfg_hash,
         "shared_out_dir": wdir,
@@ -382,6 +347,7 @@ def run_grid_fused(
         for label, cfg in wcombos:
             cdir = combo_dir(out_root, label, cfg)
             if resume and len(completed_chunks(cdir)) == cfg.n_chunks:
+                publish(cdir)  # a crash may have preceded the last publish
                 results[label] = {
                     "status": "resumed",
                     "chunks_run": [],

@@ -10,120 +10,80 @@ Physical shape (the properties that carry to 1000 executors / 100 TB):
   before anything else → parquet/Iceberg pushdown + partition pruning.
 - `html` is dropped immediately unless a stage needs it (column pruning
   discipline; the scan never materialises it for text-only runs).
-- Metrics are computed per Spark partition via spark_partition_id() inside
-  the same pass (observe-style), appended to a metrics table — the analogue
-  of the reference's extraction artifacts (mixins/extractions.py:42-62).
+- Metrics are computed per Spark partition inside the same pass (the
+  write-audit sink, plans/sink.py) and committed in each chunk's manifest;
+  `checkpoint.publish` derives the metrics and lineage tables from the
+  manifests — the analogue of the reference's extraction artifacts
+  (mixins/extractions.py:42-62), each written once.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import os
-import uuid
-
 from .checkpoint import (
     chunk_files,
-    chunk_manifest,
     chunk_path,
     completed_chunks,
     fetch_chunk,
     mark_chunk_done,
+    publish,
 )
 from .config import QAConfig
+from .sink import qa_sink
 from .skew import detect_hot_hosts, salted_repartition
 from .stages import FUSED_STAGES, STAGES
 
-# pandas dtypes of METRICS_SCHEMA (plans/sink.py) — fetched-chunk metrics
-# replayed from JSON manifests are coerced to these so an all-None column
-# (e.g. a chunk whose every partition had zero ppl rows) can't land as an
-# object-typed parquet column and break spark.read.parquet of out_dir/metrics
-_METRICS_DTYPES = {
-    "chunk": "int32", "partition_id": "int32",
-    "n_docs": "int64", "n_keep": "int64",
-    "avg_ppl": "float64", "avg_words": "float64",
-    "trip_short": "int64", "trip_symbol": "int64", "n_scrubbed": "int64",
-    "ppl_sum": "float64", "ppl_n": "int64",
-    "words_sum": "int64", "words_n": "int64",
-}
-
 
 def _metrics_records(pdf) -> list[dict]:
-    """Chunk metrics rows as JSON-safe records for the chunk manifest —
-    fetchers replay them so a cache-hydrated out_dir keeps the full
-    artifact contract (metrics/lineage present), not just the data."""
+    """Chunk metrics rows as JSON-safe records for the chunk manifest."""
     import pandas as pd
 
     recs = pdf.to_dict("records")
     for r in recs:
-        for k in ("ts_min", "ts_max"):
-            v = r.get(k)
-            r[k] = None if v is None or pd.isna(v) else str(v)
-        for k, v in list(r.items()):
-            if v is not None and pd.isna(v):
-                r[k] = None
+        for k, v in r.items():
+            r[k] = None if pd.isna(v) else str(v) if k in ("ts_min", "ts_max") else v
     return recs
 
 
-def _replay_fetched_artifacts(out_dir: str, chunk: int, fetch_wall: float) -> None:
-    """Materialize the metrics/lineage rows of a just-fetched chunk from
-    its manifest (written by fetch_chunk), keeping the same columns as
-    computed chunks so the metrics/lineage tables stay schema-stable."""
-    import pandas as pd
-
-    man = chunk_manifest(out_dir, chunk) or {}
-    recs = man.get("metrics")
-    if recs:
-        pdf = pd.DataFrame(recs)
-        for k in ("ts_min", "ts_max"):
-            if k in pdf.columns:
-                pdf[k] = pd.to_datetime(pdf[k]).astype("datetime64[us]")
-        for k, dt in _METRICS_DTYPES.items():
-            if k in pdf.columns:
-                pdf[k] = pdf[k].astype(dt)
-        _append_parquet_driver_side(pdf, f"{out_dir}/metrics")
-    lineage = pd.DataFrame(
-        [
+def commit_chunks(
+    out_dir: str,
+    chunks: list[int],
+    metrics_pdf,
+    cfg_hash: str,
+    n_hot_hosts: int,
+    wall_s: float,
+    data_dir: str | None = None,
+    **extra,
+) -> int:
+    """Commit each chunk's manifest — data file list, metrics rows and
+    lineage fields — once its data is written (under `data_dir`, default
+    `out_dir`). Returns the rows committed."""
+    total = 0
+    for c in chunks:
+        pdf = metrics_pdf[metrics_pdf["chunk"] == c]
+        rows = int(pdf["n_docs"].sum())
+        mark_chunk_done(
+            out_dir,
+            c,
             {
-                "config_hash": man.get("config_hash", ""),
-                "chunk": chunk,
-                "stages": ",".join(man.get("stages", [])),
-                "rows": man.get("rows", 0),
-                "n_hot_hosts": 0,  # fetched, no skew scan ran locally
-                "wall_s": round(fetch_wall, 3),
-            }
-        ]
-    )
-    _append_parquet_driver_side(lineage, f"{out_dir}/lineage")
-
-
-def _append_parquet_driver_side(pdf, path: str) -> None:
-    """Append a (small, already-collected) pandas frame as one parquet file.
-
-    Metrics and lineage frames live on the driver by construction (one row
-    per partition/chunk); round-tripping them through createDataFrame +
-    df.write costs a full Spark job each (~0.5-1 s of fixed latency per run,
-    pure Amdahl loss at high core counts). A direct pyarrow write is the
-    same on-disk layout a `writeTo(...).append()` would produce — on an
-    Iceberg deployment this is one catalog append."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(path, exist_ok=True)
-    pq.write_table(
-        pa.Table.from_pandas(pdf, preserve_index=False),
-        os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"),
-        coerce_timestamps="us",  # Spark-readable micros, not pandas nanos
-        allow_truncated_timestamps=True,
-    )
-
-METRIC_RULE_COLS = [
-    "n_words", "mean_word_len", "symbol_ratio",
-    "distinct_word_ratio", "stopword_ratio", "ellipsis_count",
-]
+                "rows": rows,
+                "config_hash": cfg_hash,
+                "stages": [s.name for s in STAGES],
+                "files": chunk_files(data_dir or out_dir, c),
+                "metrics": _metrics_records(pdf),
+                "n_hot_hosts": n_hot_hosts,
+                "wall_s": wall_s,
+                **extra,
+            },
+        )
+        total += rows
+    return total
 
 
 def _bucketize_staging(
@@ -162,10 +122,9 @@ def scope_filter(df: DataFrame, cfg: QAConfig) -> DataFrame:
 def apply_stages(df: DataFrame, cfg: QAConfig, fused: bool = True) -> DataFrame:
     """Fused (default): the three Python stages run as ONE pandas UDF —
     one Arrow transfer of `text` per batch instead of three. The unfused
-    path keeps per-stage physical separation (debugging / per-stage metrics)."""
-    from .stages import fused_applicable
-
-    for stage in (FUSED_STAGES if fused and fused_applicable(cfg) else STAGES):
+    path keeps per-stage physical separation — the reference surface the
+    fused kernel is tested against."""
+    for stage in (FUSED_STAGES if fused else STAGES):
         df = stage.apply(df, cfg)
     # derived columns: `scrub_delta` is the stored form (changed docs only);
     # the full scrubbed column is a JVM-side coalesce, never shipped or
@@ -202,13 +161,6 @@ def _metric_aggs(cfg: QAConfig) -> list:
     ]
 
 
-def partition_metrics(scored: DataFrame, cfg: QAConfig) -> DataFrame:
-    """Per-partition QA metrics (the extraction-artifact analogue)."""
-    return scored.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        *_metric_aggs(cfg)
-    )
-
-
 def run_qa(
     spark: SparkSession,
     pages: DataFrame,
@@ -222,6 +174,13 @@ def run_qa(
 ) -> dict:
     """Run the full QA DAG with chunked checkpointing.
 
+    Chunks without a manifest are scored by the write-audit sink (one
+    `qa_sink` job per chunk in "chunked" mode, one job over all of them in
+    "single_pass" mode), each chunk's manifest commits after its job, and
+    a final `publish` derives the metrics and lineage tables from the
+    manifests. A crash at any point leaves the uncommitted chunks to the
+    next call, which re-runs exactly those and publishes again.
+
     `hot_hosts_fn`: optional lazy provider for corpus-level skew stats —
     called ONLY if this run actually reaches the compute path (a run fully
     satisfied by resume or cache fetch never pays the detection scan).
@@ -229,7 +188,7 @@ def run_qa(
 
     Returns a summary dict: chunks run/skipped/fetched, rows, wall seconds.
     The scored corpus lands in out_dir/data/chunk=K/; per-partition metrics
-    in out_dir/metrics/; lineage rows in out_dir/lineage/.
+    in out_dir/metrics/; one lineage row per chunk in out_dir/lineage/.
 
     `cache_base`: optional shared artifact cache (path or http(s)/file URL
     mirroring an out_dir layout) — completed chunks with a matching config
@@ -249,158 +208,67 @@ def run_qa(
         # column-pruning discipline: text stages must never scan html bytes
         df = df.drop("html")
 
-    done_early = completed_chunks(out_dir) if resume else set()
-    fetched: list[int] = []
-    if resume and cache_base and len(done_early) < cfg.n_chunks:
-        for c in range(cfg.n_chunks):
-            t_fetch = time.time()
-            if c not in done_early and fetch_chunk(
-                out_dir, c, cache_base, cfg.config_hash()
-            ):
-                _replay_fetched_artifacts(out_dir, c, time.time() - t_fetch)
-                fetched.append(c)
-        done_early = completed_chunks(out_dir)
-
-    # fully-resumed run: nothing to compute (and no need to scan for skew
-    # stats) — the reference's exists()-skip, main.py:126-128
-    if len(done_early) == cfg.n_chunks:
-        return {
-            "chunks_run": [],
-            "chunks_skipped": sorted(set(done_early) - set(fetched)),
-            "chunks_fetched": fetched,
-            "rows": 0,
-            "wall_s": round(time.time() - t0, 3),
-            "hot_hosts": hot_hosts or [],
-            "config_hash": cfg.config_hash(),
-        }
-
-    # host skew statistics: pass precomputed stats (corpus-level, computed
-    # once per table — the Iceberg-table-statistics analogue) or detect now
-    if hot_hosts is not None:
-        hot = hot_hosts
-    elif hot_hosts_fn is not None:
-        hot = hot_hosts_fn()
-    else:
-        hot = detect_hot_hosts(df, cfg.hot_host_frac)
-    pre_bucketed = "bucket" in df.columns
-    if not pre_bucketed:
-        df = df.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(cfg.n_chunks)))
-    # else: input is pre-bucketed on pmod(xxhash64(url), n_chunks) — chunk
-    # filters below hit the partition column and prune the scan (Iceberg
-    # bucket-partition analogue). Contract: layout bucket count == n_chunks.
-
-    done = completed_chunks(out_dir) if resume else set()
-    ran, skipped, total_rows = [], [], 0
     cfg_hash = cfg.config_hash()
-
-    if cfg.checkpoint_mode == "single_pass" and not done:
-        return _run_single_pass(spark, df, cfg, out_dir, hot, cfg_hash, t0)
-
-    # chunked mode over NON-pre-bucketed input: a runtime-computed bucket
-    # column cannot prune the scan, so the chunk loop would re-scan the
-    # whole corpus once per chunk (n_chunks× read amplification). Auto-
-    # bucketize ONCE: one staging write partitioned by bucket; every chunk
-    # job then reads only its bucket=K directory (VERDICT r2 #5). Total
-    # input bytes across chunk jobs ≈ 1× corpus (+ the staging write)
-    # instead of n_chunks× — the dominant term at 100 TB. The staging is
-    # resumable (_SUCCESS-gated) and lives under out_dir, so its lifetime
-    # matches the run's artifacts.
-    n_todo_early = cfg.n_chunks - len(done)
-    if not pre_bucketed and n_todo_early > 1:
-        df = _bucketize_staging(spark, df, out_dir, cfg)
-
-    def _run_one_chunk(chunk: int) -> int:
-        """One chunk end-to-end: job → metrics/lineage append → manifest
-        commit. Thread-safe by construction: each chunk owns its data dir
-        and manifest file, and the metrics/lineage appends write
-        uuid-named parquet parts."""
-        t_chunk = time.time()
-        part = df.filter(F.col("bucket") == chunk).drop("bucket")
-        part = salted_repartition(part, cfg.n_partitions, hot, cfg.n_salts)
-        from .stages import fused_applicable
-
-        if fused_applicable(cfg):
-            # write-audit sink, scoped to this chunk: ONE job scores,
-            # writes chunk=K files, and returns the partition metrics
-            from .sink import qa_sink
-
-            import shutil
-
-            shutil.rmtree(chunk_path(out_dir, chunk), ignore_errors=True)
-            metrics_pdf = qa_sink(
-                part.withColumn("chunk", F.lit(chunk)), out_dir, cfg
-            ).toPandas()
-            metrics_pdf["config_hash"] = cfg_hash
-        else:
-            scored = apply_stages(part, cfg).drop("text_scrubbed")  # delta form
-            scored.write.mode("overwrite").parquet(chunk_path(out_dir, chunk))
-            # metrics over the written chunk: parquet column pruning means
-            # this job reads only small metric columns, never the text
-            out = spark.read.parquet(chunk_path(out_dir, chunk))
-            metrics_pdf = (
-                partition_metrics(out, cfg)
-                .withColumn("chunk", F.lit(chunk))
-                .withColumn("config_hash", F.lit(cfg_hash))
-                .toPandas()
-            )
-        _append_parquet_driver_side(metrics_pdf, f"{out_dir}/metrics")
-        n_rows = int(metrics_pdf["n_docs"].sum())  # no separate count job
-
-        # lineage: what ran, over what, producing what (north_rule)
-        import pandas as pd
-
-        lineage_pdf = pd.DataFrame(
-            [
-                {
-                    "config_hash": cfg_hash,
-                    "chunk": chunk,
-                    "stages": ",".join(s.name for s in STAGES),
-                    "rows": n_rows,
-                    "n_hot_hosts": len(hot),
-                    "wall_s": round(time.time() - t_chunk, 3),
-                }
-            ]
-        )
-        _append_parquet_driver_side(lineage_pdf, f"{out_dir}/lineage")
-        mark_chunk_done(
-            out_dir,
-            chunk,
-            {
-                "rows": n_rows,
-                "config_hash": cfg_hash,
-                "stages": [s.name for s in STAGES],
-                "files": chunk_files(out_dir, chunk),
-                "metrics": _metrics_records(metrics_pdf),
-            },
-        )
-        return n_rows
-
+    done = completed_chunks(out_dir) if resume else set()
+    fetched: list[int] = []
+    if resume and cache_base and len(done) < cfg.n_chunks:
+        for c in range(cfg.n_chunks):
+            if c not in done and fetch_chunk(out_dir, c, cache_base, cfg_hash):
+                fetched.append(c)
+        done = completed_chunks(out_dir)
     todo = [c for c in range(cfg.n_chunks) if c not in done]
-    skipped = sorted(set(done) - set(fetched))
-    conc = max(1, cfg.n_concurrent_chunks)
-    if conc == 1 or len(todo) <= 1:
-        for chunk in todo:
-            total_rows += _run_one_chunk(chunk)
-            ran.append(chunk)
-    else:
-        # job-level parallelism: chunk jobs are independent (disjoint url
-        # buckets, own manifests), so submitting several at once lets the
-        # Spark scheduler pipeline one chunk's straggler tail with the next
-        # chunk's map stage — on a large cluster serial submission leaves
-        # executors idle during every chunk's tail. Resume granularity is
-        # unchanged: each chunk still commits its own manifest.
-        from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=conc) as ex:
-            futs = {ex.submit(_run_one_chunk, c): c for c in todo}
-            for fut, c in futs.items():
-                total_rows += fut.result()  # re-raises a failed chunk
-                ran.append(c)
-        ran.sort()
+    # a fully-resumed run computes nothing (and needs no skew stats) — the
+    # reference's exists()-skip, main.py:126-128
+    hot, total_rows = hot_hosts or [], 0
+    if todo:
+        # host skew statistics: pass precomputed stats (corpus-level,
+        # computed once per table — the Iceberg-table-statistics analogue)
+        # or detect now
+        if hot_hosts is None:
+            hot = hot_hosts_fn() if hot_hosts_fn else detect_hot_hosts(df, cfg.hot_host_frac)
+        pre_bucketed = "bucket" in df.columns
+        if not pre_bucketed:
+            df = df.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(cfg.n_chunks)))
+        # else: input is pre-bucketed on pmod(xxhash64(url), n_chunks) —
+        # chunk filters hit the partition column and prune the scan (Iceberg
+        # bucket-partition analogue). Contract: bucket count == n_chunks.
+        # single_pass: one job over every missing chunk; chunked: one job
+        # per chunk, so a killed run loses at most the chunks in flight
+        batches = [todo] if cfg.checkpoint_mode == "single_pass" else [[c] for c in todo]
+        if len(batches) > 1 and not pre_bucketed:
+            # chunked mode over NON-pre-bucketed input: a runtime-computed
+            # bucket column cannot prune the scan, so the chunk loop would
+            # re-scan the whole corpus once per chunk (n_chunks× read
+            # amplification). Auto-bucketize ONCE: one staging write
+            # partitioned by bucket; every chunk job then reads only its
+            # bucket=K directory (VERDICT r2 #5). Total input bytes across
+            # chunk jobs ≈ 1× corpus (+ the staging write) instead of
+            # n_chunks× — the dominant term at 100 TB. The staging is
+            # resumable (_SUCCESS-gated) and lives under out_dir, so its
+            # lifetime matches the run's artifacts.
+            df = _bucketize_staging(spark, df, out_dir, cfg)
+        args = (df, cfg, out_dir, hot, cfg_hash)
+        conc = max(1, cfg.n_concurrent_chunks)
+        if conc == 1 or len(batches) == 1:
+            total_rows = sum(_run_chunks(b, *args) for b in batches)
+        else:
+            # job-level parallelism: chunk jobs are independent (disjoint
+            # url buckets, own manifests), so submitting several at once
+            # lets the Spark scheduler pipeline one chunk's straggler tail
+            # with the next chunk's map stage — on a large cluster serial
+            # submission leaves executors idle during every chunk's tail.
+            # Resume granularity is unchanged: each chunk still commits its
+            # own manifest.
+            from concurrent.futures import ThreadPoolExecutor
 
+            with ThreadPoolExecutor(max_workers=conc) as ex:
+                futs = [ex.submit(_run_chunks, b, *args) for b in batches]
+                total_rows = sum(f.result() for f in futs)  # re-raises
+    publish(out_dir)
     return {
-        "chunks_run": ran,
-        "chunks_skipped": skipped,
+        "chunks_run": todo,
+        "chunks_skipped": sorted(done - set(fetched)),
         "chunks_fetched": fetched,
         "rows": total_rows,
         "wall_s": round(time.time() - t0, 3),
@@ -409,95 +277,33 @@ def run_qa(
     }
 
 
-def _run_single_pass(
-    spark: SparkSession,
+def _run_chunks(
+    chunks: list[int],
     df: DataFrame,
     cfg: QAConfig,
     out_dir: str,
     hot: list[str],
     cfg_hash: str,
-    t0: float,
-) -> dict:
-    """ONE fused job: salted repartition → write-audit mapInPandas sink
-    (plans/sink.py) that scores, writes per-chunk parquet, and returns the
-    per-(chunk, partition) metrics rows — no second job, no read-back.
-    Same on-disk layout + manifest as the chunked path, so later invocations
-    resume chunk-wise. Custom stop-word configs (fused kernel inapplicable)
-    fall back to the expression stages + JVM writer."""
-    from .sink import qa_sink
-    from .stages import fused_applicable
-
+) -> int:
+    """ONE write-audit sink job (plans/sink.py) scores `chunks` — writing
+    their data/chunk=K/ files and returning the partition metrics, no
+    second job, no read-back — then each chunk's manifest commits. Returns
+    the rows committed. Thread-safe by construction: each chunk owns its
+    data dir and manifest file."""
+    t_job = time.time()
+    part = df
+    if len(chunks) < cfg.n_chunks:
+        part = df.filter(F.col("bucket").isin(chunks))
     part = salted_repartition(
-        df.withColumnRenamed("bucket", "chunk"), cfg.n_partitions, hot, cfg.n_salts
+        part.withColumnRenamed("bucket", "chunk"), cfg.n_partitions, hot, cfg.n_salts
     )
-    if fused_applicable(cfg):
-        # overwrite semantics: clear any uncommitted output of a prior
-        # crashed run (a committed run has a manifest and never gets here)
-        import shutil
-
-        shutil.rmtree(f"{out_dir}/data", ignore_errors=True)
-        metrics_pdf = qa_sink(part, out_dir, cfg).toPandas()
-        metrics_pdf["config_hash"] = cfg_hash
-    else:
-        scored = apply_stages(part, cfg).drop("text_scrubbed")
-        scored.write.mode("overwrite").partitionBy("chunk").parquet(
-            f"{out_dir}/data"
-        )
-        out = spark.read.parquet(f"{out_dir}/data")
-        metrics_pdf = (
-            out.groupBy(
-                F.col("chunk"), F.spark_partition_id().alias("partition_id")
-            )
-            .agg(*_metric_aggs(cfg))
-            .withColumn("config_hash", F.lit(cfg_hash))
-            .toPandas()
-        )
-    _append_parquet_driver_side(metrics_pdf, f"{out_dir}/metrics")
-    per_chunk = {
-        int(c): int(n)
-        for c, n in metrics_pdf.groupby("chunk")["n_docs"].sum().items()
-    }
-    total_rows = sum(per_chunk.values())
-    wall = round(time.time() - t0, 3)
-    import pandas as pd
-
-    lineage_pdf = pd.DataFrame(
-        [
-            {
-                "config_hash": cfg_hash,
-                "chunk": int(c),
-                "stages": ",".join(s.name for s in STAGES),
-                "rows": n,
-                "n_hot_hosts": len(hot),
-                "wall_s": wall,
-            }
-            for c, n in sorted(per_chunk.items())
-        ]
-    )
-    _append_parquet_driver_side(lineage_pdf, f"{out_dir}/lineage")
-    for c in range(cfg.n_chunks):
-        mark_chunk_done(
-            out_dir,
-            c,
-            {
-                "rows": per_chunk.get(c, 0),
-                "config_hash": cfg_hash,
-                "stages": [s.name for s in STAGES],
-                "files": chunk_files(out_dir, c),
-                "metrics": _metrics_records(
-                    metrics_pdf[metrics_pdf["chunk"] == c]
-                ),
-            },
-        )
-    return {
-        "chunks_run": list(range(cfg.n_chunks)),
-        "chunks_skipped": [],
-        "chunks_fetched": [],
-        "rows": total_rows,
-        "wall_s": wall,
-        "hot_hosts": hot,
-        "config_hash": cfg_hash,
-    }
+    # overwrite semantics: clear any uncommitted output of a prior crashed
+    # attempt (a committed chunk has a manifest and never gets here)
+    for c in chunks:
+        shutil.rmtree(chunk_path(out_dir, c), ignore_errors=True)
+    metrics_pdf = qa_sink(part, out_dir, cfg).toPandas()
+    wall = round(time.time() - t_job, 3)
+    return commit_chunks(out_dir, chunks, metrics_pdf, cfg_hash, len(hot), wall)
 
 
 def read_scored(spark: SparkSession, out_dir: str) -> DataFrame:

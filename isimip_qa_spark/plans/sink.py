@@ -19,10 +19,13 @@ Why this shape (measured on this sandbox, reasoned for 1000 executors):
   write-audit-publish with the manifest as the catalog (Iceberg-snapshot
   analogue, and the resume unit per north_rule).
 
-Semantics contract: identical output values to the column-expression path
-(chunked mode) — enforced by tests/test_qa_pipeline.py single_pass==chunked.
-One caveat: a NULL `text` row gets keep=False here (pandas) where the
-expression path writes keep=NULL; both count as "not kept" in every metric.
+Semantics contract: this sink is the only writer of scored rows, in both
+checkpoint modes. Its values equal the column-expression stages
+(`apply_stages(fused=False)`, the reference surface) — enforced by
+tests/test_functions.py fused==unfused and by the pandas-oracle tests in
+tests/test_qa_pipeline.py. One caveat: a NULL `text` row gets keep=False
+here (pandas) where the expression stages give keep=NULL; both count as
+"not kept" in every metric.
 """
 
 from __future__ import annotations
@@ -54,6 +57,11 @@ METRICS_SCHEMA = (
     "avg_words double, trip_short long, trip_symbol long, n_scrubbed long, "
     "ts_min timestamp, ts_max timestamp, "
     "ppl_sum double, ppl_n long, words_sum long, words_n long"
+)
+# one row per committed chunk, derived from its manifest (checkpoint.publish)
+LINEAGE_SCHEMA = (
+    "config_hash string, chunk int, stages string, rows long, "
+    "n_hot_hosts int, wall_s double"
 )
 
 # stable on-disk schema for the scored rows (everything the JVM writer
@@ -87,17 +95,26 @@ _OUT_COLS = [
 ]
 
 
-def _pa_schema():
+def _arrow_schema(cols):
+    """pyarrow schema of (name, Spark SQL type) pairs, or of a DDL string
+    such as METRICS_SCHEMA."""
     import pyarrow as pa
 
+    if isinstance(cols, str):
+        cols = [f.split() for f in cols.split(",")]
     m = {
         "string": pa.string(),
         "timestamp": pa.timestamp("us"),
         "double": pa.float64(),
+        "int": pa.int32(),
         "long": pa.int64(),
         "boolean": pa.bool_(),
     }
-    return pa.schema([(name, m[t]) for name, t in _OUT_COLS])
+    return pa.schema([(name, m[t]) for name, t in cols])
+
+
+def _pa_schema():
+    return _arrow_schema(_OUT_COLS)
 
 
 def _profile_thresholds(s: pd.DataFrame, cfg):

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import textstats as ts
-from ..functions.langid import lang_pred_udf
+from ..functions.langid import STOPWORD_UNION, lang_pred_udf
 from ..functions.perplexity import ppl_udf
 from ..functions.scrub import scrub_delta_udf
 from .config import QAConfig
@@ -52,7 +52,7 @@ def _rules(df: DataFrame, cfg: QAConfig) -> DataFrame:
             "mean_word_len": ts.mean_word_len_expr(text),
             "symbol_ratio": ts.symbol_ratio_expr(text),
             "distinct_word_ratio": ts.distinct_word_ratio_expr(text),
-            "stopword_ratio": ts.stopword_ratio_expr(text, cfg.stopwords),
+            "stopword_ratio": ts.stopword_ratio_expr(text, STOPWORD_UNION),
             "ellipsis_count": ts.ellipsis_count_expr(text),
             "dup_line_frac": ts.dup_line_frac_expr(text),
             "dup_para_frac": ts.dup_para_frac_expr(text),
@@ -127,15 +127,6 @@ def _decision(df: DataFrame, cfg: QAConfig) -> DataFrame:
         & F.col("lang_pred").isin(*cfg.allowed_langs)
     )
     return df.withColumn("keep", keep)
-
-
-def fused_applicable(cfg: QAConfig) -> bool:
-    """The fused kernel hard-codes the default stop-word union (its langid
-    lookup doubles as the stop-word membership test); custom stopword
-    configs run the column-expression stages instead."""
-    from .config import _union_stopwords
-
-    return list(cfg.stopwords) == _union_stopwords()
 
 
 def _python_scores_fused(df: DataFrame, cfg: QAConfig) -> DataFrame:

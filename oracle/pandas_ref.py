@@ -56,7 +56,7 @@ def qa_frame(pages: pd.DataFrame, cfg: QAConfig | None = None) -> pd.DataFrame:
     out["distinct_word_ratio"] = (
         np.array([len(set(tk)) for tk in tok_lists]) / n_words
     )
-    sw = set(cfg.stopwords)
+    sw = {w for ws in LANG_STOPWORDS.values() for w in ws}
     out["stopword_ratio"] = (
         np.array([sum(1 for w in t.lower().split(" ") if w in sw) for t in texts])
         / n_words

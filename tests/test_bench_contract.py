@@ -5,9 +5,10 @@ the calibration/banding constants must stay sane."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def test_bench_queries_all_registered():

@@ -69,7 +69,7 @@ _ROUND_AGG = re.compile(r"round\s*\(\s*-?\s*(?:avg|sum)\s*\(", re.I)
 def _oracles():
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from isimip_qa_spark.queries import ORACLES, load_all
 
     load_all()
@@ -190,6 +190,8 @@ def test_exp_ppl_rows_clear_of_round6_boundaries(sf_dir):
     sb = oracles["ppl_stupid_backoff"].replace(
         "round(sum(lp) / count(*), 6)", "round(sum(lp) / count(*), 12)"
     )
+    # the probe must run at the widened precision, not the shipped one
+    assert sb != oracles["ppl_stupid_backoff"]
     avgs.append(
         con.execute(f"SELECT avg_logprob FROM ({sb})").df()["avg_logprob"]
     )

@@ -34,7 +34,7 @@ def _merge(tmp_path, monkeypatch, run):
 
 
 def test_same_run_id_noop_same_value_new_run_kept(tmp_path, monkeypatch):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     base = {
         "levels": {"1": {"docs_per_sec": 1.0}},
         "pages_n": 100000,
@@ -59,7 +59,7 @@ def test_same_run_id_noop_same_value_new_run_kept(tmp_path, monkeypatch):
 
 
 def test_legacy_run_without_id_hash_keyed(tmp_path, monkeypatch):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     base = {
         "levels": {"1": {"docs_per_sec": 1.0}},
         "pages_n": 100000,

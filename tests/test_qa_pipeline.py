@@ -119,6 +119,8 @@ def test_resume_after_partial_failure(spark, pages_sdf, cfg, tmp_path):
     assert sorted(summary["chunks_skipped"]) == [0, 1, 3]
     got = read_scored(spark, out).toPandas()
     assert len(got) == pages_sdf.count()
+    metrics = spark.read.parquet(f"{out}/metrics").toPandas()
+    assert metrics["n_docs"].sum() == len(got)  # the re-run chunk counts once
 
 
 def test_window_and_cohort_pushdown(spark, pages_sdf, tmp_path):

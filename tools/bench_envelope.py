@@ -38,11 +38,11 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 WORKER = r"""
 import os, sys, time
-sys.path.insert(0, "/root/repo")
 import numpy as np
 # same malloc tuning the engine's Python workers get (session.py)
 # (set by the parent before spawn; keep env as-is here)
@@ -62,7 +62,6 @@ print(n)
 
 PIPELINE_WORKER = r"""
 import os, sys, time
-sys.path.insert(0, "/root/repo")
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -160,6 +159,7 @@ def run_level(n_workers: int, secs: float, mode: str = "kernel") -> float:
                 text=True,
                 env=dict(
                     os.environ,
+                    PYTHONPATH=os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")])),
                     MALLOC_MMAP_THRESHOLD_="536870912",
                     MALLOC_TRIM_THRESHOLD_="536870912",
                 ),

@@ -18,11 +18,12 @@ the blind spot left by the driver sampling only ~50 of the queries.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def normalize(df):

@@ -3,7 +3,7 @@
 # experiments + matched-profile envelope, run sequentially so no experiment
 # pollutes another. Outputs one JSON per experiment under /tmp/scaling_r3/.
 set -u
-cd /root/repo
+cd "$(dirname "$0")/.."
 OUT=/tmp/scaling_r3
 mkdir -p $OUT
 
