@@ -18,4 +18,11 @@ Layout:
   streaming/  — Structured Streaming variant of the metrics stage
 """
 
+from ._lazyzip import install as _install_lazy_zip_invalidation
+
 __version__ = "0.1.0"
+
+# every package UDF is pickled by reference, so each Python worker that
+# runs one imports this package in its first task and skips the per-task
+# zip-listing re-reads in all later ones (see _lazyzip)
+_install_lazy_zip_invalidation()

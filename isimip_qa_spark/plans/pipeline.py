@@ -19,6 +19,7 @@ Physical shape (the properties that carry to 1000 executors / 100 TB):
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import time
@@ -38,6 +39,8 @@ from .config import QAConfig
 from .sink import qa_sink
 from .skew import detect_hot_hosts, salted_repartition
 from .stages import FUSED_STAGES, STAGES
+
+log = logging.getLogger(__name__)
 
 
 def _metrics_records(pdf) -> list[dict]:
@@ -217,6 +220,9 @@ def run_qa(
                 fetched.append(c)
         done = completed_chunks(out_dir)
     todo = [c for c in range(cfg.n_chunks) if c not in done]
+    skipped = sorted(done - set(fetched))
+    log.info("run_qa %s: skipped chunks %s, fetched %s, running %s",
+             out_dir, skipped, fetched, todo)
 
     # a fully-resumed run computes nothing (and needs no skew stats) — the
     # reference's exists()-skip, main.py:126-128
@@ -227,6 +233,7 @@ def run_qa(
         # or detect now
         if hot_hosts is None:
             hot = hot_hosts_fn() if hot_hosts_fn else detect_hot_hosts(df, cfg.hot_host_frac)
+            log.info("run_qa %s: hot hosts %s", out_dir, hot)
         pre_bucketed = "bucket" in df.columns
         if not pre_bucketed:
             df = df.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(cfg.n_chunks)))
@@ -268,7 +275,7 @@ def run_qa(
     publish(out_dir)
     return {
         "chunks_run": todo,
-        "chunks_skipped": sorted(done - set(fetched)),
+        "chunks_skipped": skipped,
         "chunks_fetched": fetched,
         "rows": total_rows,
         "wall_s": round(time.time() - t0, 3),

@@ -30,11 +30,14 @@ here (pandas) where the expression stages give keep=NULL; both count as
 
 from __future__ import annotations
 
+import logging
 import os
 from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+log = logging.getLogger(__name__)
 
 
 def _round4_half_up(x: float) -> float:
@@ -255,8 +258,8 @@ def qa_sink(scored_input: DataFrame, out_dir: str, cfg) -> DataFrame:
                             continue
                         try:
                             os.remove(stale)
-                        except OSError:
-                            pass
+                        except OSError as e:
+                            log.debug("stale tmp %s not removed: %s", stale, e)
                     tmp = os.path.join(cdir, f".part-{pid:05d}-{attempt}.tmp")
                     final = os.path.join(cdir, f"part-{pid:05d}.parquet")
                     w = (_make_writer(pq, tmp, schema), tmp, final)

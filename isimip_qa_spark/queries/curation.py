@@ -381,7 +381,15 @@ def ppl_bucket_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     flips and the driver's hash check goes red, which is precisely the
     regression this row exists to surface. n_docs pins both engines to
     the same population. tests/test_curation.py keeps the stronger
-    per-doc >= 98% assertion on the sketch itself."""
+    per-doc >= 98% assertion on the sketch itself.
+
+    The hash alone cannot see a common-mode failure (heavy avg_lp ties or
+    tiny language groups pushing BOTH sides below the bar give matching
+    false rows), so tools/check_oracles.py also requires agreement_ok to
+    be true on each side. The false alarm runs the other way, from the
+    twin: if quantile_cont vs ntile dips below 0.98 while the Spark
+    sketch still clears it, the hash goes red with no Spark regression —
+    read the twin's own agreement rate before blaming the engine."""
     d = read_table(spark, sf_dir, "documents")
     scored = d.select(
         "doc_id", "lang", ppl_udf(F.col("text")).alias("s")

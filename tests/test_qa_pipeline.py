@@ -107,14 +107,20 @@ def test_resume_skips_completed_chunks(spark, pages_sdf, cfg, scored):
     assert sorted(summary2["chunks_skipped"]) == [0, 1, 2, 3]
 
 
-def test_resume_after_partial_failure(spark, pages_sdf, cfg, tmp_path):
+def test_resume_after_partial_failure(spark, pages_sdf, cfg, tmp_path, caplog):
     """Kill/restart: drop one chunk's manifest → only that chunk re-runs,
     and the final corpus is complete (reference analogue: artifact-exists
-    skip, main.py:126-128)."""
+    skip, main.py:126-128). The resume decision and the detected hot hosts
+    are logged."""
     out = str(tmp_path / "qa_partial")
     run_qa(spark, pages_sdf, cfg, out)
     os.remove(os.path.join(out, "_manifest", "chunk_2.json"))
-    summary = run_qa(spark, pages_sdf, cfg, out, resume=True)
+    with caplog.at_level("INFO", logger="isimip_qa_spark"):
+        summary = run_qa(spark, pages_sdf, cfg, out, resume=True)
+    logged = [r.getMessage() for r in caplog.records
+              if r.name == "isimip_qa_spark.plans.pipeline"]
+    assert f"run_qa {out}: skipped chunks [0, 1, 3], fetched [], running [2]" in logged
+    assert any("hot hosts [" in m and "host0.example.org" in m for m in logged)
     assert summary["chunks_run"] == [2]
     assert sorted(summary["chunks_skipped"]) == [0, 1, 3]
     got = read_scored(spark, out).toPandas()

@@ -53,6 +53,43 @@ def normalize(df):
     return rows
 
 
+# Boolean columns a query promises are true. Matching values are not
+# enough there: both engines can fail the same bar together (ADVICE r5 on
+# ppl_bucket_agreement), so each side must read true.
+MUST_BE_TRUE = {"ppl_bucket_agreement": "agreement_ok"}
+
+
+def compare(name, sdf, odf) -> dict:
+    """Spark result vs its DuckDB twin (pandas frames) → the per-query
+    CORRECTNESS record; `err` joins the problems, None when it passes."""
+    problems = []
+    rows_match = len(sdf) == len(odf)
+    if not rows_match:
+        problems.append(f"rowcount spark={len(sdf)} duck={len(odf)}")
+    schema_match = sorted(map(str.lower, sdf.columns)) == sorted(
+        map(str.lower, odf.columns)
+    )
+    if not schema_match:
+        problems.append(f"columns spark={sorted(sdf.columns)} duck={sorted(odf.columns)}")
+    hash_match = False
+    if not problems:
+        a, b = normalize(sdf), normalize(odf)
+        hash_match = a == b
+        if not hash_match:
+            diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
+            problems.append(f"values differ, e.g. {diffs}")
+    gate = MUST_BE_TRUE.get(name)
+    for side, df in (("spark", sdf), ("duck", odf)):
+        if gate in df.columns and not df[gate].eq(True).all():
+            problems.append(f"{gate} not true on {side}")
+    return {
+        "rows_match": rows_match, "schema_match": schema_match,
+        "hash_match": hash_match, "spark_rows": len(sdf),
+        "oracle_rows": len(odf),
+        "err": "; ".join(problems) or None,
+    }
+
+
 def main():
     import json
 
@@ -120,30 +157,10 @@ def main():
             }
             n_fail += 1
             continue
-        problems = []
-        rows_match = len(sdf) == len(odf)
-        if not rows_match:
-            problems.append(f"rowcount spark={len(sdf)} duck={len(odf)}")
-        schema_match = sorted(map(str.lower, sdf.columns)) == sorted(
-            map(str.lower, odf.columns)
-        )
-        if not schema_match:
-            problems.append(f"columns spark={sorted(sdf.columns)} duck={sorted(odf.columns)}")
-        hash_match = False
-        if not problems:
-            a, b = normalize(sdf), normalize(odf)
-            hash_match = a == b
-            if not hash_match:
-                diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
-                problems.append(f"values differ, e.g. {diffs}")
-        record[name] = {
-            "rows_match": rows_match, "schema_match": schema_match,
-            "hash_match": hash_match, "spark_rows": len(sdf),
-            "oracle_rows": len(odf),
-            "err": "; ".join(problems) or None,
-        }
-        if problems:
-            print(f"FAIL {name}: {'; '.join(problems)} [{time.time()-t0:.1f}s]")
+        record[name] = compare(name, sdf, odf)
+        err = record[name]["err"]
+        if err:
+            print(f"FAIL {name}: {err} [{time.time()-t0:.1f}s]")
             n_fail += 1
         else:
             print(f"PASS {name}: {len(sdf)} rows [{time.time()-t0:.1f}s]")
